@@ -22,8 +22,6 @@ collect anywhere.
 
 from __future__ import annotations
 
-from typing import Callable
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window
@@ -141,37 +139,56 @@ def merge_cdc(
     validate_hash_chain: bool = False,
 ) -> DataFrame:
     """A4 + J1-J4 + U2 rebuilt: apply a batch of mapped CDC events to a
-    target table, returning the new full table image.
+    target table, returning the new full table image — the logical form of
+    merging ``net_changes`` into ``target`` (which is what the pipeline
+    does on disk through sources.merge_write).
 
     Semantics (reference src/apply_change_log_to_delta.py:376-422,594-648):
     events fold per key in ``pos`` order; last state wins; a final D drops
-    the row; keys absent from the target insert. The reference's two-step
-    "seed new keys with the first event, then replay the rest" collapses to
-    last-event-wins because I/U payloads are whole-row images.
+    the row; keys absent from the target insert. See ``net_changes`` for
+    the fold and the hash-chain variant.
+    """
+    net = net_changes(target, mapped_events, pk, order_col, validate_hash_chain)
+    # Rows never touched by an event: anti join on event keys (J2).
+    untouched = target.join(
+        mapped_events.select(*pk).distinct(), on=pk, how="left_anti"
+    )
+    # Keep upserts, drop deletes (reference :645-646 keeps action in {U, I}).
+    upserts = net.filter(~F.col("__is_delete")).drop("__is_delete")
+    return untouched.unionByName(upserts)
+
+
+def net_changes(
+    target: DataFrame,
+    mapped_events: DataFrame,
+    pk: list[str],
+    order_col: str = "admin_gg_pos",
+    validate_hash_chain: bool = False,
+) -> DataFrame:
+    """The per-key net change of a batch against ``target``: the target's
+    columns plus ``__is_delete``, one row per key the batch resolves —
+    the frame sources.merge_write (or Delta MERGE) applies.
+
+    Default: last-writer-wins (``cdc_upsert_frame``). The reference's
+    two-step "seed new keys with the first event, then replay the rest"
+    collapses to last-event-wins because I/U payloads are whole-row images.
 
     ``validate_hash_chain=True`` enables the dev-variant integrity check the
     reference shipped disabled (``if 1 == 1`` at :384; real check at
     dev/_read_delta_table.py:343-369): an event applies only if its
     ``previous_hash`` matches the hash of the state it lands on; a rejected
     D is skipped; a D followed by I resurrects as U. That fold is inherently
-    sequential per key, so it runs as a grouped Arrow-batched
-    ``applyInPandas`` — per-key groups are tiny (one batch of events), and
-    the shuffle is the same PK hash partition the fast path uses.
+    sequential per key and reads ``target`` for the starting state, so it
+    runs as a grouped Arrow-batched fold (``_chain_fold``) on the same PK
+    hash partition the fast path uses.
     """
     target_cols = target.columns
     if validate_hash_chain:
         finals = _chain_fold(target, mapped_events, pk, order_col, target_cols)
+        net = finals.withColumn("__is_delete", F.col("__action") == F.lit("D"))
     else:
-        finals = latest_event_per_key(mapped_events, pk, order_col)
-        finals = finals.withColumn("__action", F.col("event_type"))
-
-    # Rows never touched by an event: anti join on event keys (J2).
-    untouched = target.join(
-        mapped_events.select(*pk).distinct(), on=pk, how="left_anti"
-    )
-    # Keep upserts, drop deletes (reference :645-646 keeps action in {U, I}).
-    upserts = finals.filter(F.col("__action") != "D").select(*target_cols)
-    return untouched.unionByName(upserts)
+        net = cdc_upsert_frame(mapped_events, pk, order_col)
+    return net.select(*target_cols, "__is_delete")
 
 
 def cdc_upsert_frame(
@@ -179,10 +196,9 @@ def cdc_upsert_frame(
     pk: list[str],
     order_col: str = "admin_gg_pos",
 ) -> DataFrame:
-    """Incremental-merge form: the per-key net change of a batch — final row
-    image plus ``__is_delete`` — ready for sources.merge_write / Delta MERGE.
-    This is the shape a streaming foreachBatch uses (streaming/cdc_stream.py).
-    """
+    """Last-writer-wins net change of a batch: the final event per key plus
+    ``__is_delete`` (the fold ``net_changes`` uses without hash-chain
+    validation)."""
     finals = latest_event_per_key(mapped_events, pk, order_col)
     return finals.withColumn("__is_delete", F.col("event_type") == F.lit("D"))
 
@@ -311,14 +327,6 @@ def _chain_fold(
         *pk, F.col("__is_base").desc(), F.col(order_col).asc_nulls_last()
     )
     return arranged.mapInPandas(fold_partitions, schema=out_schema)
-
-
-def apply_to_curated(
-    df: DataFrame, transform: Callable[[DataFrame], DataFrame] | None = None
-) -> DataFrame:
-    """Stage 3 (reference src/apply_to_curated.py:153-161): identity today,
-    pluggable business-rule transform tomorrow."""
-    return transform(df) if transform else df
 
 
 def scd2_history(

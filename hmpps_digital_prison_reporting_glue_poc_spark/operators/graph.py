@@ -59,12 +59,6 @@ def connected_components(
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
-    def materialize(df: DataFrame, i: int) -> DataFrame:
-        path = f"{workdir}/iter_{i}"
-        df.write.mode("overwrite").parquet(path)
-        shutil.rmtree(f"{workdir}/iter_{i - 1}", ignore_errors=True)
-        return spark.read.parquet(path)
-
     sym_path = f"{workdir}/edges"
     sym.write.mode("overwrite").parquet(sym_path)
     sym = spark.read.parquet(sym_path)

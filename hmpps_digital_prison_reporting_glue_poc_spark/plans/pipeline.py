@@ -11,8 +11,12 @@ Stage map (reference -> here):
 Differences from the reference (its own README lists these as flaws,
 reference README.md:48-58):
 - the event log is appended partition-by-partition, not rewritten;
-- the structured merge is shuffle-based (operators.cdc.merge_cdc) and the
-  write is the incremental merge sink, not a full-table overwrite;
+- each touched table's batch folds to one net-change frame per key
+  (operators.cdc.net_changes, a shuffle-based fold), and stages 2 and 3
+  both apply that frame with the incremental merge sink
+  (sources.io.merge_write), not a full-table overwrite or copy;
+- batch (``run_pipeline``) and micro-batch (``run_pipeline_streaming``)
+  differ only in landing; stages 2-4 are the same calls;
 - per-table work is derived from the event log with one distinct scan, and
   everything downstream of it is per-table DataFrame lineage — no driver
   collect of data rows (only the table-name list, which is metadata-scale).
@@ -31,18 +35,16 @@ from hmpps_digital_prison_reporting_glue_poc_spark.functions.cdc_functions impor
     format_table_name,
 )
 from hmpps_digital_prison_reporting_glue_poc_spark.operators.cdc import (
-    apply_to_curated,
     ingest_events,
     map_events_to_target,
-    merge_cdc,
+    net_changes,
 )
 from hmpps_digital_prison_reporting_glue_poc_spark.plans.domains import (
     run_domains,
 )
-from hmpps_digital_prison_reporting_glue_poc_spark.sources.io import (
-    read_cdc_json,
-    write_partitioned_parquet,
-)
+# Module import, not ``from io import merge_write``: merge_write is looked
+# up at call time, so a wrapper installed on the module (tracing) applies.
+from hmpps_digital_prison_reporting_glue_poc_spark.sources import io
 
 
 @dataclass
@@ -67,27 +69,26 @@ def run_landing(
     part_date serves the downstream incremental reads."""
     spec = catalog.get(cfg.event_log_table)
     if cfg.quarantine:
-        from hmpps_digital_prison_reporting_glue_poc_spark.sources.io import split_corrupt
-
-        raw, corrupt = split_corrupt(
-            read_cdc_json(spark, cfg.raw_path, cfg.row_schema, quarantine=True)
+        raw, corrupt = io.split_corrupt(
+            io.read_cdc_json(spark, cfg.raw_path, cfg.row_schema, quarantine=True)
         )
         corrupt.write.mode("append").parquet(spec.path + "_quarantine")
     else:
-        raw = read_cdc_json(spark, cfg.raw_path, cfg.row_schema)
+        raw = io.read_cdc_json(spark, cfg.raw_path, cfg.row_schema)
     log = ingest_events(raw)
-    write_partitioned_parquet(log, spec.path, ["part_date"], mode="append")
+    io.write_partitioned_parquet(log, spec.path, ["part_date"], mode="append")
     return log
 
 
 def run_structured(
     spark: SparkSession, cfg: PipelineConfig, catalog: Catalog,
     event_log: DataFrame | None = None,
-) -> list[str]:
-    """Stage 2 (E2): event log -> per-table CDC merge into structured
-    tables. Returns the list of touched logical table names (drives stage 4
-    ACTIVE filtering, replacing the reference's hard-coded
-    KINESIS_EVENTS_TABLES)."""
+) -> dict[str, DataFrame]:
+    """Stage 2 (E2): event log -> per-table net-change frame, merged into
+    the structured table. Returns touched logical table name -> that
+    frame (target columns + ``__is_delete``); stage 3 merges the same
+    frames into curated, and the names drive stage 4 ACTIVE filtering
+    (replacing the reference's hard-coded KINESIS_EVENTS_TABLES)."""
     log = (
         event_log
         if event_log is not None
@@ -96,7 +97,7 @@ def run_structured(
     tables = [
         r[0] for r in log.select(F.lower("table")).distinct().collect()
     ]  # metadata-scale collect (table names only)
-    touched: list[str] = []
+    changes: dict[str, DataFrame] = {}
     for qualified in tables:
         name = format_table_name(qualified)
         if name not in cfg.tables:
@@ -104,35 +105,54 @@ def run_structured(
         target_name, _ = cfg.tables[name]
         spec = catalog.get(target_name)
         target = catalog.read(spark, target_name)
-        events = log.filter(F.lower("table") == qualified.lower())
-        mapped = map_events_to_target(events, target.schema)
-        merged = merge_cdc(
-            target, mapped, pk=spec.pk,
+        events = log.filter(F.lower("table") == qualified)
+        net = net_changes(
+            target, map_events_to_target(events, target.schema), spec.pk,
             validate_hash_chain=cfg.validate_hash_chain,
         )
-        # Self-referencing read->write: break lineage before overwrite.
-        merged.localCheckpoint(eager=True).write.mode("overwrite").format(
-            spec.format
-        ).save(spec.path)
-        touched.append(name)
-    return touched
+        # Materialize once: the hash-chain fold reads the structured table
+        # this merge replaces, and stage 3 applies the same frame again.
+        net = net.localCheckpoint(eager=True)
+        io.merge_write(
+            spark, net, spec.path, spec.pk, delete_col="__is_delete",
+            partition_by=spec.partition_by or None,
+        )
+        changes[name] = net
+    return changes
 
 
 def run_curated(
     spark: SparkSession, cfg: PipelineConfig, catalog: Catalog,
-    tables: list[str] | None = None,
-    transform=None,
+    tables: dict[str, DataFrame],
 ) -> list[str]:
-    """Stage 3 (E3 bridge): structured -> curated, pluggable transform
-    (identity today, reference src/apply_to_curated.py:153-161)."""
-    done = []
-    for name, (target_name, curated_name) in cfg.tables.items():
-        if tables is not None and name not in tables:
-            continue
-        df = apply_to_curated(catalog.read(spark, target_name), transform)
-        catalog.write(df, curated_name)
-        done.append(name)
-    return done
+    """Stage 3 (E3 bridge): curated is the identity image of structured
+    (reference src/apply_to_curated.py:153-161), so each table's stage-2
+    net-change frame merges into curated unchanged — an incremental write
+    sized by the batch, not a copy of the structured table."""
+    for name, net in tables.items():
+        target_name, curated_name = cfg.tables[name]
+        cspec = catalog.get(curated_name)
+        io.merge_write(
+            spark, net, cspec.path, cspec.pk or catalog.get(target_name).pk,
+            delete_col="__is_delete",
+            partition_by=cspec.partition_by or None,
+        )
+    return list(tables)
+
+
+def _apply_log(
+    spark: SparkSession, cfg: PipelineConfig, catalog: Catalog,
+    log: DataFrame, defs_df: DataFrame | None, process_id: int | None,
+) -> dict[str, DataFrame]:
+    """Stages 2-4 over one landed slice of the event log."""
+    changes = run_structured(spark, cfg, catalog, event_log=log)
+    run_curated(spark, cfg, catalog, tables=changes)
+    if defs_df is None or not changes:
+        return {}
+    return run_domains(
+        spark, defs_df, [cfg.tables[t][1] for t in changes], catalog,
+        process_id=process_id, write=True,
+    )
 
 
 def run_pipeline(
@@ -142,15 +162,7 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """All four stages. Returns the materialised domain frames."""
     log = run_landing(spark, cfg, catalog)
-    touched = run_structured(spark, cfg, catalog, event_log=log)
-    run_curated(spark, cfg, catalog, tables=touched)
-    if defs_df is None:
-        return {}
-    curated_touched = [cfg.tables[t][1] for t in touched]
-    return run_domains(
-        spark, defs_df, curated_touched, catalog,
-        process_id=process_id, write=True,
-    )
+    return _apply_log(spark, cfg, catalog, log, defs_df, process_id)
 
 
 def run_pipeline_streaming(
@@ -169,29 +181,23 @@ def run_pipeline_streaming(
     Kinesis trigger stubs src/apply_change_log_to_delta.py:521-528).
 
     Identical final state to the batch pipeline (pinned by
-    tests/test_pipeline_stream_e2e.py): within a batch the GoldenGate
-    ``pos`` order folds to one net image per key (``cdc_upsert_frame``),
-    across batches the incremental ``merge_write`` applies each batch's
-    net changes in source order — the same last-writer-wins algebra the
-    batch path computes in one fold. Domains refresh per batch, so the
-    domain tables are continuously correct, not only at drain time.
+    tests/test_pipeline_stream_e2e.py): each micro-batch is landed, then
+    runs the batch pipeline's own stages 2-4 (``run_structured`` ->
+    ``run_curated`` -> ``run_domains``) on its slice of the event log.
+    Within a batch the GoldenGate ``pos`` order folds to one net change
+    per key (``net_changes``, hash-chain validated against the current
+    structured state when ``validate_hash_chain`` is set); across batches
+    ``merge_write`` applies each batch's net changes in source order — the
+    same algebra the batch path computes in one fold. Domains refresh per
+    batch, so the domain tables are continuously correct, not only at
+    drain time.
 
     Runs with ``availableNow`` + ``maxFilesPerTrigger`` (drain everything
     currently in the directory, in bounded micro-batches) and blocks until
     drained; a continuous deployment would drop the trigger and keep the
     same checkpoint. Returns the number of non-empty micro-batches.
     """
-    from hmpps_digital_prison_reporting_glue_poc_spark.operators.cdc import cdc_upsert_frame
-    from hmpps_digital_prison_reporting_glue_poc_spark.sources.io import (
-        cdc_envelope_schema,
-        merge_write,
-    )
-
     log_spec = catalog.get(cfg.event_log_table)
-    target_schemas = {
-        name: catalog.read(spark, target_name).schema
-        for name, (target_name, _) in cfg.tables.items()
-    }
     n_batches = {"n": 0}
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -200,56 +206,15 @@ def run_pipeline_streaming(
         n_batches["n"] += 1
         # stage 1: landing append (immutable event log, date-partitioned)
         log = ingest_events(batch_df)
-        write_partitioned_parquet(
+        io.write_partitioned_parquet(
             log, log_spec.path, ["part_date"], mode="append"
         )
-        # stage 2: per-table incremental merge of the batch's net changes
-        tables = [
-            r[0] for r in log.select(F.lower("table")).distinct().collect()
-        ]  # metadata-scale (table names in this batch)
-        touched = []
-        for qualified in tables:
-            name = format_table_name(qualified)
-            if name not in cfg.tables:
-                continue
-            target_name, _ = cfg.tables[name]
-            spec = catalog.get(target_name)
-            events = log.filter(F.lower("table") == qualified.lower())
-            mapped = map_events_to_target(events, target_schemas[name])
-            net = cdc_upsert_frame(mapped, spec.pk)
-            updates = net.select(
-                *[f.name for f in target_schemas[name].fields], "__is_delete"
-            )
-            merge_write(
-                spark, updates, spec.path, spec.pk, delete_col="__is_delete",
-                partition_by=spec.partition_by or None,
-            )
-            touched.append(name)
-            # stage 3, INCREMENTALLY: curated is the identity image of
-            # structured (apply_to_curated's default), so merging the SAME
-            # net updates into curated yields the same state as the batch
-            # path's full copy — without rewriting the whole curated table
-            # every micro-batch (round-6 streaming stress: the full copy
-            # made per-batch cost grow with the table, the streaming
-            # analogue of the reference's full-overwrite flaw).
-            curated_name = cfg.tables[name][1]
-            cspec = catalog.get(curated_name)
-            merge_write(
-                spark, updates, cspec.path, cspec.pk or spec.pk,
-                delete_col="__is_delete",
-                partition_by=cspec.partition_by or None,
-            )
-        if defs_df is not None and touched:
-            curated_touched = [cfg.tables[t][1] for t in touched]
-            run_domains(
-                spark, defs_df, curated_touched, catalog,
-                process_id=process_id, write=True,
-            )
+        _apply_log(spark, cfg, catalog, log, defs_df, process_id)
         if on_batch is not None:  # observability hook (stream stress)
             on_batch(batch_id)
 
     raw = (
-        spark.readStream.schema(cdc_envelope_schema(cfg.row_schema))
+        spark.readStream.schema(io.cdc_envelope_schema(cfg.row_schema))
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(cfg.raw_path)
     )

@@ -159,7 +159,7 @@ def merge_write(
     stable per key (a row never migrates partitions between versions) —
     same invariant a Delta/Hudi partitioned upsert requires.
     """
-    if HAS_DELTA and DeltaTable is not None and DeltaTable.isDeltaTable(spark, path):
+    if HAS_DELTA and DeltaTable.isDeltaTable(spark, path):
         cond = " AND ".join(f"t.{k} = u.{k}" for k in pk)
         builder = DeltaTable.forPath(spark, path).alias("t").merge(
             updates.alias("u"), cond
@@ -197,7 +197,6 @@ def merge_write(
         return
     if exists:
         target = spark.read.parquet(path)
-    if exists:
         untouched = target.join(updates.select(*pk).distinct(), on=pk, how="left_anti")
         # Schema evolution (reference S8: Delta mergeSchema on domain
         # writes, src/apply_to_domains.py:223-224): new columns on either

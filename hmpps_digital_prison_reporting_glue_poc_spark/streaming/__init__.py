@@ -1,6 +1,3 @@
-from hmpps_digital_prison_reporting_glue_poc_spark.streaming.cdc_stream import (  # noqa: F401
-    stream_cdc_to_table,
-)
 from hmpps_digital_prison_reporting_glue_poc_spark.streaming.sessionize import (  # noqa: F401
     stream_sessionize,
 )

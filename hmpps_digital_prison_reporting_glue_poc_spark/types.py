@@ -47,7 +47,7 @@ def schema_from_ddl(ddl: str) -> T.StructType:
     reference src/apply_change_log_to_delta.py:347-351)."""
     body = ddl
     match = re.search(r"\((.*)\)\s*;?\s*$", ddl, flags=re.S)
-    if match and "create" in ddl.lower():
+    if match and re.match(r"\s*create\b", ddl, flags=re.I):
         body = match.group(1)
     fields = []
     for part in _split_top_level(body):

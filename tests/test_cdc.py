@@ -18,7 +18,6 @@ from hmpps_digital_prison_reporting_glue_poc_spark.operators.cdc import (
     first_event_per_key,
     map_events_to_target,
     merge_cdc,
-    apply_to_curated,
 )
 from hmpps_digital_prison_reporting_glue_poc_spark.sources import read_cdc_json
 from hmpps_digital_prison_reporting_glue_poc_spark.types import (
@@ -250,13 +249,6 @@ def test_first_and_latest_event_per_key(spark, tmp_path):
     assert last == {1: "B", 2: "X"}
 
 
-def test_curated_identity_and_transform(spark):
-    df = spark.range(3)
-    assert apply_to_curated(df).collect() == df.collect()
-    doubled = apply_to_curated(df, lambda d: d.withColumn("x", F.col("id") * 2))
-    assert [r.x for r in doubled.orderBy("id").collect()] == [0, 2, 4]
-
-
 def test_type_map_and_ddl_parser():
     assert isinstance(spark_type_for("VARCHAR2(40)"), T.StringType)
     assert isinstance(spark_type_for("number"), T.IntegerType)
@@ -266,6 +258,11 @@ def test_type_map_and_ddl_parser():
     )
     assert [f.name for f in schema.fields] == ["offender_id", "last_name", "birth_date"]
     assert isinstance(schema.fields[2].dataType, T.DateType)
+    # a bare column list is not a CREATE body, whatever its column names
+    bare = schema_from_ddl(
+        "offender_id bigint, create_date date, last_name varchar2(40)"
+    )
+    assert bare.fieldNames() == ["offender_id", "create_date", "last_name"]
     admin = with_admin_columns(schema)
     assert admin.fieldNames()[-4:] == [
         "admin_hash", "admin_gg_pos", "admin_gg_op_ts", "admin_event_ts",

@@ -12,6 +12,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import types as T
@@ -90,11 +91,10 @@ DEFS_DDL = (
 )
 
 
-def _wire(spark, base: str) -> tuple[PipelineConfig, Catalog]:
-    raw = os.path.join(base, "raw")
+def _write_raw(raw: str, files: list[list[dict]]) -> str:
     os.makedirs(raw)
     now = int(time.time())
-    for i, events in enumerate(BATCH_FILES):
+    for i, events in enumerate(files):
         fp = os.path.join(raw, f"batch_{i}.json")
         with open(fp, "w") as f:
             for e in events:
@@ -102,7 +102,12 @@ def _wire(spark, base: str) -> tuple[PipelineConfig, Catalog]:
         # Strictly increasing mtimes: FileStreamSource orders micro-batches
         # by file timestamp, and trail files arrive over time in production;
         # same-second writes would make the replay order nondeterministic.
-        os.utime(fp, (now - len(BATCH_FILES) + i, now - len(BATCH_FILES) + i))
+        os.utime(fp, (now - len(files) + i, now - len(files) + i))
+    return raw
+
+
+def _wire(spark, base: str) -> tuple[PipelineConfig, Catalog]:
+    raw = _write_raw(os.path.join(base, "raw"), BATCH_FILES)
     cat = Catalog()
     cat.register(TableSpec("gg_event_log", os.path.join(base, "log"),
                            partition_by=["part_date"]))
@@ -193,3 +198,56 @@ def test_stream_pipeline_checkpoint_resume_is_incremental(spark, tmp_path):
     dom = _table_rows(spark, scat, "domain1_names",
                       ["offender_id", "full_name"])
     assert (4, "Newer Person") in dom
+
+
+def test_batch_then_stream_keep_partitioned_tables(spark, tmp_path):
+    """Both drivers honour the catalog's ``partition_by`` for structured
+    AND curated: a batch run lays structured out partitioned, so a later
+    streaming drain's partition-scoped merge over the same catalog sees
+    every row instead of only the partitions it touched."""
+    data_cols = ["offender_id", "first_name", "last_name"]
+    cfg, cat = _wire(spark, str(tmp_path / "p"))
+    for name in ("offenders", "offenders_curated"):
+        cat.get(name).partition_by = ["last_name"]
+
+    run_pipeline(spark, cfg, cat)
+    structured_dir = cat.get("offenders").path
+    assert any(p.startswith("last_name=") for p in os.listdir(structured_dir))
+
+    raw = _write_raw(str(tmp_path / "raw_new"),
+                     [[_event("U", 10, 1, "Pat", "Murphy")]])
+    run_pipeline_streaming(spark, replace(cfg, raw_path=raw), cat,
+                           checkpoint_dir=str(tmp_path / "ckpt"))
+
+    expected = {
+        (1, "Pat", "Murphy"),
+        (3, "Back", "Again"),
+        (4, "New", "Person"),
+    }
+    for name in ("offenders", "offenders_curated"):
+        assert _table_rows(spark, cat, name, data_cols) == expected, name
+
+
+def test_stream_and_batch_agree_under_hash_chain_validation(spark, tmp_path):
+    """``validate_hash_chain`` applies to both drivers: an update whose
+    ``before`` image does not match the live row is rejected by the batch
+    fold and by the streaming fold (which checks the chain against the
+    structured state left by the earlier micro-batch)."""
+    broken = _event("U", 2, 1, "Xavier", "Murphy")
+    broken["before"] = {"OFFENDER_ID": 1, "LAST_NAME": "Murphy",
+                        "FIRST_NAME": "Someone else"}
+    raw = _write_raw(str(tmp_path / "raw_chain"),
+                     [[_event("I", 1, 1, "Pat", "Murphy")], [broken]])
+
+    finals = {}
+    for mode in ("batch", "stream"):
+        cfg, cat = _wire(spark, str(tmp_path / mode))
+        cfg = replace(cfg, raw_path=raw, validate_hash_chain=True)
+        if mode == "batch":
+            run_pipeline(spark, cfg, cat)
+        else:
+            run_pipeline_streaming(spark, cfg, cat,
+                                   checkpoint_dir=str(tmp_path / "ckpt"))
+        finals[mode] = _table_rows(spark, cat, "offenders",
+                                   ["offender_id", "first_name"])
+    assert finals["batch"] == finals["stream"] == {(1, "Pat")}

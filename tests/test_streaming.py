@@ -1,5 +1,6 @@
 """Structured Streaming CDC tests: micro-batch incremental merge with
-checkpointed resume — batch/stream parity for the A4 fold semantics."""
+checkpointed resume — batch/stream parity for the A4 fold semantics,
+driven through ``run_pipeline_streaming`` with a one-table config."""
 
 import json
 import os
@@ -7,7 +8,11 @@ import os
 import pytest
 from pyspark.sql import types as T
 
-from hmpps_digital_prison_reporting_glue_poc_spark.streaming import stream_cdc_to_table
+from hmpps_digital_prison_reporting_glue_poc_spark.catalog import Catalog, TableSpec
+from hmpps_digital_prison_reporting_glue_poc_spark.plans.pipeline import (
+    PipelineConfig,
+    run_pipeline_streaming,
+)
 from hmpps_digital_prison_reporting_glue_poc_spark.types import (
     schema_from_ddl,
     with_admin_columns,
@@ -46,18 +51,28 @@ def _append_batch(srcdir, name, events):
             f.write(json.dumps(e) + "\n")
 
 
-def _run_once(spark, srcdir, target, ckpt):
-    q = stream_cdc_to_table(
-        spark, srcdir, ROW_SCHEMA, TARGET_SCHEMA, target,
-        pk=["offender_id"], checkpoint_dir=ckpt,
+def _wire(spark, base):
+    """One-table pipeline: source table ``T.X`` -> structured ``x`` (the
+    asserted target) and curated ``x_curated``."""
+    srcdir = os.path.join(base, "src")
+    os.makedirs(srcdir)
+    cat = Catalog()
+    cat.register(TableSpec("log", os.path.join(base, "log"),
+                           partition_by=["part_date"]))
+    cat.register(TableSpec("x", os.path.join(base, "target"),
+                           pk=["offender_id"]))
+    cat.register(TableSpec("x_curated", os.path.join(base, "curated")))
+    spark.createDataFrame([], TARGET_SCHEMA).write.parquet(cat.get("x").path)
+    cfg = PipelineConfig(
+        raw_path=srcdir, event_log_table="log", row_schema=ROW_SCHEMA,
+        tables={"x": ("x", "x_curated")},
     )
-    q.awaitTermination(120)
+    return cfg, cat
 
 
 def test_stream_incremental_merge_across_batches(spark, tmp_path):
-    srcdir = os.path.join(str(tmp_path), "src")
-    os.makedirs(srcdir)
-    target = os.path.join(str(tmp_path), "target")
+    cfg, cat = _wire(spark, str(tmp_path))
+    srcdir, target = cfg.raw_path, cat.get("x").path
     ckpt = os.path.join(str(tmp_path), "ckpt")
 
     _append_batch(srcdir, "b1.json", [
@@ -65,7 +80,7 @@ def test_stream_incremental_merge_across_batches(spark, tmp_path):
         _event("U", 2, 1, "B"),
         _event("I", 3, 2, "C"),
     ])
-    _run_once(spark, srcdir, target, ckpt)
+    run_pipeline_streaming(spark, cfg, cat, checkpoint_dir=ckpt)
     state = {r.offender_id: r.last_name
              for r in spark.read.parquet(target).collect()}
     assert state == {1: "B", 2: "C"}
@@ -77,7 +92,7 @@ def test_stream_incremental_merge_across_batches(spark, tmp_path):
         _event("U", 5, 2, "C2"),
         _event("I", 6, 3, "New"),
     ])
-    _run_once(spark, srcdir, target, ckpt)
+    run_pipeline_streaming(spark, cfg, cat, checkpoint_dir=ckpt)
     state = {r.offender_id: r.last_name
              for r in spark.read.parquet(target).collect()}
     assert state == {2: "C2", 3: "New"}
@@ -94,12 +109,12 @@ def test_stream_batch_parity_with_batch_merge(spark, tmp_path):
         _event("I", 3, 2, "C"), _event("D", 4, 2, "C"),
         _event("I", 5, 3, "D"),
     ]
-    srcdir = os.path.join(str(tmp_path), "src2")
-    os.makedirs(srcdir)
+    cfg, cat = _wire(spark, str(tmp_path))
+    srcdir, target = cfg.raw_path, cat.get("x").path
     _append_batch(srcdir, "all.json", events)
 
-    target = os.path.join(str(tmp_path), "t2")
-    _run_once(spark, srcdir, target, os.path.join(str(tmp_path), "c2"))
+    run_pipeline_streaming(spark, cfg, cat,
+                           checkpoint_dir=os.path.join(str(tmp_path), "c2"))
     stream_state = {r.offender_id: r.last_name
                     for r in spark.read.parquet(target).collect()}
 
